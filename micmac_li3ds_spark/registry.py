@@ -414,7 +414,7 @@ _loaded = False
 #            one round earlier than staleness would force it) + slot 2
 #            free for a key registered in r17 under POST_FREEZE_LEDGER
 #            or, if none, for the oldest r14-stratum key.
-#   round 18 (this window): ninth consolidation — exactly the
+#   round 18: ninth consolidation — exactly the
 #            r17-verdict ledger. The staleness invariant (max_round−4
 #            with CORRECTNESS_r17 on disk) enumerates the 48
 #            r13-attested keys below (fn/sort/limit heads, JDBC
@@ -440,6 +440,11 @@ _loaded = False
 #            slots — spend them on keys registered this round under
 #            POST_FREEZE_LEDGER (birth attestations), oldest-first
 #            r15-stratum keys if any ledger entry slips.
+#   round 20 (this window): the staleness invariant (max_round−4 with
+#            CORRECTNESS_r19 on disk) enumerates the 50 r15-attested
+#            keys — the whole window, enumeration order preserved. No
+#            slot is free, so the five r19 behaviour-changed queries
+#            wait for the next rotation.
 #   Steady state: birth-round attestation for new queries +
 #            oldest-first rotation keeps every green ≤ 4 rounds old.
 DRIVER_WINDOW = 50
@@ -472,64 +477,61 @@ POST_FREEZE_LEDGER: dict[str, int] = {}
 # registered post-freeze in r19 — an optimization round adds no queries.)
 
 _PRIORITY: list[str] = [
-    # --- round-19 window: the 47 r14-attested keys forced by the
+    # --- round-20 window: the 50 r15-attested keys forced by the
     # staleness invariant (test_registry.py::
     # test_window_contains_every_stale_attestation with
-    # CORRECTNESS_r18 on disk; enumeration order preserved) ---
-    "q_llm_dedup_clusters",
-    "q_set_intersect",
-    "q_set_except",
-    "q_set_intersect_all",
-    "q_set_except_all",
-    "q_subquery_scalar",
-    "q_subquery_in",
-    "q_subquery_corr_agg",
-    "q_subquery_exists_range",
-    "q_udf_python",
-    "q_udf_pandas",
-    "q_udaf_pandas",
-    "q_udtf_applyinpandas",
-    "q_udtf_python",
-    "q_udf_cogrouped",
-    "q_udf_sql",
-    "q_scan_parquet",
-    "q_scan_csv",
-    "q_scan_json",
-    "q_sink_parquet_partitioned",
-    "q_sink_orc_roundtrip",
-    "q_scan_binaryfile",
-    "q_topk_global",
-    "q_llm_knn_ivf",
-    "q_llm_knn_batch",
-    "q_llm_hard_negatives",
-    "q_llm_embed_quant",
-    "q_llm_lm_score",
-    "q_priority_linestatus",
-    "q_order_count_distribution",
-    "q_small_qty_revenue",
-    "q_disjunctive_revenue",
-    "q_idle_customer_balance",
-    "q_win_nth_value",
-    "q_etl_sessionize",
-    "q_etl_snapshot_diff",
-    "q_sample_weighted",
-    "q_join_skew_salted",
-    "q_join_null_safe",
-    "q_mm_feature_extract",
-    "q_llm_kmeans_fix",
-    "q_graph_triangles",
-    "q_graph_sssp",
-    "q_agg_heavy_hitters",
-    "q_graph_kcore",
-    "q_layout_bucketed_join",
-    "q_layout_partition_pruning",
-    # --- slots 48-50 (r18 ledger, MANDATORY): birth-hash slots for
-    # the three WARC/crawl compositions registered r18 post-freeze;
-    # their POST_FREEZE_LEDGER grace expired when CORRECTNESS_r18
-    # landed ---
-    "q_llm_warc_to_documents",
-    "q_llm_warc_links",
-    "q_llm_url_normalize",
+    # CORRECTNESS_r19 on disk; enumeration order preserved). They fill
+    # every slot, so no free slot remains this round ---
+    "q_pricing_summary",
+    "q_agg_grouping_sets",
+    "q_agg_pivot",
+    "q_agg_conditional",
+    "q_join_broadcast",
+    "q_join_range",
+    "q_join_asof",
+    "q_join_self",
+    "q_win_lag_lead",
+    "q_win_running",
+    "q_win_moving",
+    "q_win_dedup_latest",
+    "q_fn_json",
+    "q_fn_variant",
+    "q_llm_exact_dedup",
+    "q_llm_tokenize_tf",
+    "q_llm_knn",
+    "q_llm_embed_dedup",
+    "q_shipping_priority",
+    "q_local_supplier_volume",
+    "q_large_volume_customer",
+    "q_event_funnel",
+    "q_etl_fk_check",
+    "q_llm_train_split",
+    "q_llm_seq_pack",
+    "q_etl_scd2",
+    "q_stream_tumbling",
+    "q_set_union_all",
+    "q_set_union_distinct",
+    "q_set_dedup_subset",
+    "q_udf_mapinpandas",
+    "q_scan_python_datasource",
+    "q_event_retention",
+    "q_win_range_frame",
+    "q_agg_listagg",
+    "q_agg_boolean",
+    "q_agg_mode",
+    "q_join_lateral",
+    "q_fn_bitwise",
+    "q_fn_hash",
+    "q_fn_interval",
+    "q_llm_token_count",
+    "q_llm_fingerprint",
+    "q_etl_transfo_closure_cte",
+    "q_stream_sliding",
+    "q_stream_session",
+    "q_sample_stratified",
+    "q_mm_payload_hash",
+    "q_mm_header_parse",
+    "q_llm_dedup_keep_best",
 ]
 
 

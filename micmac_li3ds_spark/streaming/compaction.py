@@ -60,9 +60,20 @@ At 100 TB: state rows are small relative to the corpus (fingerprints,
 band keys, vectors), so a generation re-write is a seconds-to-minutes
 parallel job; ``num_files`` sizes the output (defaults to one file per
 ``spark.sql.shuffle.partitions`` worth of input dirs, min 1 — callers
-with byte-size targets pass an explicit count). File count after
-compaction is num_files + O(batches since last compaction), bounded by
-compaction cadence instead of feed lifetime.
+with byte-size targets pass an explicit count). A BUCKETED generation
+is sized to the bytes it folds: ``ceil(folded_bytes /
+spark.sql.files.maxPartitionBytes)`` buckets, clamped to
+[1, ``MAX_BUCKETS``], where ``folded_bytes`` is the previous
+generation plus the folded batch dirs (one Hadoop
+``getContentSummary`` per dir, no Spark job). At scale that reaches the
+64-bucket ceiling; at small state it is one bucket. A fixed 64 cost a
+fold over ~100 KB of state 64 write tasks, two 63-path distributed
+listing jobs and ~450 forked ``chmod`` processes (Hadoop's local
+filesystem without native IO forks one per created file and dir),
+about half the forks of a 3-batch exact-dedup stream. File
+count after compaction is num_files (or the bucket count) + O(batches
+since last compaction), bounded by compaction cadence instead of feed
+lifetime.
 """
 
 from __future__ import annotations
@@ -71,9 +82,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 SRC_BATCH_COL = "src_batch"
 BUCKET_COL = "pb"
+#: ceiling of the state-sized bucket count (``_sized_buckets``)
+MAX_BUCKETS = 64
 LEASE_NAME = "_COMPACT_LEASE"
 RETENTION_NAME = "_RETENTION"
 #: bucket_by sentinel: adopt the previous generation's _GEN_META layout
@@ -95,6 +109,33 @@ def bucket_expr(col_name: str, n_buckets: int):
     hash), so buckets computed at read time match the layout written
     at compaction time."""
     return F.pmod(F.xxhash64(F.col(col_name)), F.lit(n_buckets)).cast("int")
+
+
+def _sized_buckets(spark, fs, dirs) -> int:
+    """Bucket count for a generation folding ``dirs``: one bucket per
+    ``spark.sql.files.maxPartitionBytes`` of their summed bytes, in
+    [1, MAX_BUCKETS]. The per-bucket size is the same setting that
+    sizes a scan's input splits, so one bucket is one read task."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    folded = sum(fs.getContentSummary(Path(d)).getLength() for d in dirs)
+    per_bucket = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    return min(MAX_BUCKETS, max(1, -(-folded // per_bucket)))
+
+
+def _empty_state(spark: SparkSession, ddl: str) -> DataFrame:
+    """Zero-row frame of the declared schema, planned on the JVM:
+    ``spark.range(0)`` projected to typed null literals, so it starts
+    no Python worker (a frame from an empty Python list cost a
+    stream's batch 0 one worker per default-parallelism task, ~1.4 s
+    on 4 cores) and the optimizer folds a join against it away.
+    Columns are nullable, exactly as a file-source read of the same
+    DDL declares them."""
+    schema = _parse_datatype_string(ddl)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 def _write_meta(spark, fs, path: str, g: int, meta: dict) -> None:
@@ -198,8 +239,9 @@ def resolve_state(
     the accumulated state size (SCALE.md §13's file-pruning layout).
     Correctness-neutral by construction: the filter keeps a SUPERSET
     of every row that can match a key (same hash, same modulus), and
-    is silently skipped when the generation is unbucketed or bucketed
-    on a different column.
+    is silently skipped when the generation is unbucketed, bucketed
+    on a different column, or has ONE bucket (the filter would keep
+    every row, so the bucket-collecting job is not run).
 
     ``min_src_batch`` — the READ side of the retention horizon
     (code-review r18 #1): rows first written before it are excluded
@@ -222,6 +264,7 @@ def resolve_state(
         gen = spark.read.schema(gen_ddl).parquet(newest[1])
         if (
             meta is not None
+            and meta["n_buckets"] > 1
             and prune_keys is not None
             and prune_keys.columns == [meta["bucket_by"]]
         ):
@@ -253,7 +296,7 @@ def resolve_state(
     if live:
         parts.append(spark.read.schema(ddl).parquet(*live))
     if not parts:
-        return spark.createDataFrame([], ddl)
+        return _empty_state(spark, ddl)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -370,7 +413,7 @@ def compact_state_dir(
     num_files: "int | None" = None,
     up_to: "int | None" = None,
     bucket_by: "str | None" = None,
-    n_buckets: int = 64,
+    n_buckets: "int | None" = None,
     min_src_batch: "int | None" = None,
     lease_owner: "str | None" = None,
 ) -> dict:
@@ -406,10 +449,16 @@ def compact_state_dir(
     ``_GEN_META_<g>`` file written before the commit marker; each
     fold re-clusters the whole state, so changing ``bucket_by`` or
     ``n_buckets`` between folds is safe (the newest generation's meta
-    is the only one readers consult). ``num_files`` is ignored when
-    bucketing (layout is per-bucket). ``bucket_by=INHERIT_LAYOUT``
-    adopts the previous generation's ``_GEN_META`` settings (or plain
-    when there is none) — resolved UNDER the lease, so a concurrent
+    is the only one readers consult). ``n_buckets`` is exact when
+    given; when None the count is sized to the state the fold reads
+    (the previous generation plus the folded batch dirs): one bucket
+    per ``spark.sql.files.maxPartitionBytes``, in [1, MAX_BUCKETS] —
+    a fixed 64 made every small-state fold pay 64 write tasks, two
+    distributed listings and ~450 ``chmod`` forks (module docstring).
+    ``num_files`` is ignored when bucketing (layout is per-bucket).
+    ``bucket_by=INHERIT_LAYOUT`` adopts the previous generation's
+    ``_GEN_META`` settings (an explicit ``n_buckets`` still wins; plain
+    when there is no meta) — resolved UNDER the lease, so a concurrent
     fold cannot change the layout between the decision and the write
     (code-review r17 #3). ``lease_owner`` — see ``_acquire_lease``."""
     fs, hpath = _fs(spark, path)
@@ -437,7 +486,7 @@ def _compact_under_lease(
             _read_meta(spark, path, newest[0]) if newest is not None else None
         )
         bucket_by = meta["bucket_by"] if meta is not None else None
-        if meta is not None:
+        if meta is not None and n_buckets is None:
             n_buckets = meta["n_buckets"]
     if up_to is None:
         # exclude the highest live id: on a live stream it may be the
@@ -500,6 +549,9 @@ def _compact_under_lease(
     new_g = (newest[0] + 1) if newest else 0
     gen_dir = f"{path}/gen={new_g}"
     if bucket_by is not None:
+        if n_buckets is None:
+            read = ([newest[1]] if newest else []) + list(fold.values())
+            n_buckets = _sized_buckets(spark, fs, read)
         merged = merged.withColumn(
             BUCKET_COL, bucket_expr(bucket_by, n_buckets)
         )

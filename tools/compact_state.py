@@ -19,12 +19,15 @@ Usage:
 
 Layout flags: ``--bucket-by``/``--n-buckets`` select the hash-bucketed
 generation layout the in-stream cadence writes for its file-pruned
-state joins. When NEITHER is given, the previous generation's
-``_GEN_META`` settings are reused — so running the CLI on a dir the
-stream keeps bucketed (seen/fp, bands/band_key, vectors/cid) preserves
-the pruning layout instead of silently rewriting it unbucketed
-(ADVICE r16 #3). Pass ``--bucket-by ''`` to force an unbucketed
-rewrite explicitly.
+state joins. ``--bucket-by`` without ``--n-buckets`` sizes the bucket
+count to the folded state exactly as the in-stream fold does (one
+bucket per ``spark.sql.files.maxPartitionBytes``, at most 64); an
+explicit ``--n-buckets`` is used as given. When ``--bucket-by`` is
+not given, the previous generation's ``_GEN_META`` settings are
+reused — so running the CLI on a dir the stream keeps bucketed
+(seen/fp, bands/band_key, vectors/cid) preserves the pruning layout
+instead of silently rewriting it unbucketed (ADVICE r16 #3). Pass
+``--bucket-by ''`` to force an unbucketed rewrite explicitly.
 
 ``--min-src-batch K`` is the retention horizon: state rows first
 written under a batch id < K are dropped and the count reported
@@ -66,7 +69,13 @@ def main() -> None:
         help="hash-bucket the generation on this column (default: reuse "
         "the previous generation's _GEN_META layout; '' forces unbucketed)",
     )
-    ap.add_argument("--n-buckets", type=int, default=None)
+    ap.add_argument(
+        "--n-buckets",
+        type=int,
+        default=None,
+        help="exact bucket count (default: sized to the folded state; "
+        "with an inherited layout, the previous generation's count)",
+    )
     ap.add_argument(
         "--min-src-batch",
         type=int,
@@ -112,7 +121,7 @@ def main() -> None:
         num_files=args.num_files,
         up_to=args.up_to,
         bucket_by=bucket_by,
-        n_buckets=args.n_buckets if args.n_buckets is not None else 64,
+        n_buckets=args.n_buckets,
         min_src_batch=args.min_src_batch,
     )
     res["data_files_after"] = C.state_file_count(spark, args.dir)
