@@ -30,12 +30,6 @@ def pct(col: Column | str) -> Column:
     return F.round(c * 100).cast("long")
 
 
-def dround(col: Column, scale: int = 6) -> Column:
-    """Round a double for hash comparison; use only on values whose
-    magnitude keeps `scale` decimals meaningful (avgs, ratios, similarities)."""
-    return F.round(col, scale)
-
-
 # DuckDB-side spellings of the same helpers, for oracle SQL strings.
 def duck_cents(expr: str) -> str:
     return f"CAST(round(({expr}) * 100, 0) AS BIGINT)"

@@ -41,7 +41,3 @@ def l2_normalize(a: Column) -> Column:
 
 # DuckDB spellings (embedding list<float> → double first).
 DUCK_VEC = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-
-
-def duck_cosine(a: str, b: str) -> str:
-    return f"list_cosine_similarity({a}, {b})"
